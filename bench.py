@@ -13,8 +13,9 @@ Default run (what the driver does):
     BENCH/BASELINE.md. 4->16 is used instead of 8->32 because the
     32-vCPU host saturates shared memory bandwidth / all-core turbo
     near full subscription — a single-box artifact; on a multi-node
-    cluster each executor owns its bandwidth. local[32] absolute
-    throughput is still reported.
+    cluster each executor owns its bandwidth. Absolute throughput at
+    local[$SPARK_GRAFT_CPUS] (default: the host's core count,
+    os.cpu_count()) is still reported.
   * noise sentinel: three never-changing pure-JVM queries are compared
     to their median across prior archived runs at the same sf; a >1.5x
     MEDIAN deviation (uniform episode) OR a >3x single-sentinel
@@ -39,7 +40,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 N_POINTS = int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", "32000000"))
 SCALE_PAIR = tuple(int(x) for x in
                    os.environ.get("SPARK_GRAFT_SCALE_PAIR", "4,16").split(","))

@@ -129,6 +129,12 @@ def polygon_cover(rings, res: int, exact: bool = True) -> np.ndarray:
     cell, or a cell-boundary/ring edge crossing. A superset of the true
     cover is always acceptable (the ray-cast refine is exact); the
     pruning just shrinks the broadcast side.
+
+    The test is ``rings.rects_intersect_polygon``, a scanline: the
+    probes are ray-cast once per distinct grid row, not once per cell,
+    and a ring edge is tested only against cells within one cell width
+    and height of its bounding box (no computed crossing lies farther
+    out). Its result equals the per-cell evaluation bit for bit.
     """
     rings = [np.asarray(r, dtype=np.float64) for r in rings]
     allpts = np.vstack(rings)

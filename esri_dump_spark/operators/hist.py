@@ -304,7 +304,8 @@ def winsorize(df: DataFrame, value_col: str, lo: float, hi: float,
     table is one row per group and AQE broadcasts it back, so the
     data rows themselves NEVER shuffle (the mad_outliers shape) —
     and the same null-safe key join keeps NULL groups clipped
-    against their own band."""
+    against their own band. It is a left join, so a group whose
+    values are all NULL/NaN (no band) keeps its rows."""
     _check_grid(lo, hi, bins)
     for p in (p_lo, p_hi):
         if not (isinstance(p, int) and 1 <= p <= 1000):
@@ -329,7 +330,9 @@ def winsorize(df: DataFrame, value_col: str, lo: float, hi: float,
         for g in groups:
             c = _qcol(g).eqNullSafe(_qcol(f"_wz_{g}"))
             cond = c if cond is None else cond & c
-        joined = df.join(bounds, cond).drop(
+        # left join: a group with only NULL/NaN values has no bounds
+        # row, and its rows pass through the clip CASE untouched
+        joined = df.join(bounds, cond, "left").drop(
             *[f"_wz_{g}" for g in groups])
     else:
         joined = df.crossJoin(bounds)

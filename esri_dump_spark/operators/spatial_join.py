@@ -73,19 +73,17 @@ def build_polygon_dim(polygons: pd.DataFrame, res: int = DEFAULT_RES):
     """Precompute the static polygon dimension: (cell-cover pdf,
     rings-by-poly-id dict). At scale this is built once per polygon
     set and reused across every query/run against it."""
-    cells, pids = [], []
+    cells, pids, rings_by_pid = [], [], {}
     for rec in polygons.itertuples(index=False):
         rings = _parse_rings(rec.rings_json)
         cover = C.polygon_cover(rings, res, exact=True)
         cells.append(cover)
         pids.append(np.full(cover.shape, rec.poly_id, dtype=np.int64))
+        rings_by_pid[int(rec.poly_id)] = [a.tolist() for a in rings]
     cover_pdf = pd.DataFrame({
         "cell": np.concatenate(cells) if cells else np.array([], np.int64),
         "poly_id": np.concatenate(pids) if pids else np.array([], np.int64),
     })
-    rings_by_pid = {int(r.poly_id):
-                    [a.tolist() for a in _parse_rings(r.rings_json)]
-                    for r in polygons.itertuples(index=False)}
     return cover_pdf, rings_by_pid
 
 

@@ -223,6 +223,25 @@ def test_winsorize_validation_and_null_group(spark):
     assert out.count() == 3
 
 
+def test_winsorize_all_null_group_passes_through(spark):
+    """A group with no non-NULL, non-NaN value has no band; its rows
+    pass through unclipped instead of dropping out of the join."""
+    from esri_dump_spark.operators.hist import winsorize
+    rows = [("a", 10.0), ("a", 500.0), ("b", None), ("b", float("nan")),
+            (None, None)]
+    df = spark.createDataFrame(rows, "g string, x double")
+    got = winsorize(df, "x", LO, HI, BINS, ("g",), 100, 900).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        if r["g"] == "a":
+            continue
+        if r["x"] is None:
+            assert r["clipped"] is None and r["was_clipped"] is None
+        else:
+            assert math.isnan(r["clipped"]) and r["was_clipped"] == 0
+    assert sorted(r["g"] or "" for r in got) == ["", "a", "a", "b", "b"]
+
+
 # ------------------------------------------------------------ moments
 
 def test_moments_exact_vs_fraction(spark):

@@ -1,17 +1,25 @@
 """Property tests (hypothesis): the cache-blocked ray cast must equal
 a literal transcription of the reference predicate on arbitrary rings
-and points, and ring assembly invariants must hold for arbitrary ring
-soups.
+and points, ring assembly invariants must hold for arbitrary ring
+soups, and the scanline cell-cover kernel must equal the plain
+per-rect three-stage test bit for bit.
 """
 
 from __future__ import annotations
 
+import math
+from unittest import mock
+
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from esri_dump_spark.kernels.rings import (close_ring, points_in_ring,
+from esri_dump_spark.kernels import cells as C
+from esri_dump_spark.kernels.rings import (close_ring, edges_intersect,
+                                           points_in_polygon, points_in_ring,
+                                           rects_intersect_polygon,
                                            ring_is_clockwise,
                                            rings_to_geojson)
+from esri_dump_spark.operators import tiles as T
 
 coord = st.floats(min_value=-180.0, max_value=180.0,
                   allow_nan=False, allow_infinity=False, width=64)
@@ -120,3 +128,155 @@ def test_polygons_intersect_matches_rect_oracle(rects_a, rects_b):
                    for (ax0, ay0, ax1, ay1) in boxes_a
                    for (bx0, by0, bx1, by1) in boxes_b)
     assert polygons_intersect(rings_a, rings_b) == expected
+
+
+# ---- scanline cover kernel vs the plain per-rect three-stage test -----
+
+def _reference_rects_intersect_polygon(rings, x0, y0, x1, y1):
+    """The plain path: ray-cast five probes per rect, then test every
+    rect they reject against every vertex and, one rect at a time, every
+    ring edge with ``edges_intersect``."""
+    rings = [np.asarray(r, dtype=np.float64) for r in rings]
+    x0 = np.asarray(x0, dtype=np.float64)
+    y0 = np.asarray(y0, dtype=np.float64)
+    x1 = np.asarray(x1, dtype=np.float64)
+    y1 = np.asarray(y1, dtype=np.float64)
+    allpts = np.vstack(rings)
+    keep = np.zeros(x0.shape[0], dtype=bool)
+    for px, py in ((x0, y0), (x0, y1), (x1, y0), (x1, y1),
+                   ((x0 + x1) / 2, (y0 + y1) / 2)):
+        keep |= points_in_polygon(np.column_stack([px, py]), rings)
+    vx, vy = allpts[:, 0], allpts[:, 1]
+    for i in np.where(~keep)[0]:
+        if np.any((vx >= x0[i]) & (vx <= x1[i])
+                  & (vy >= y0[i]) & (vy <= y1[i])):
+            keep[i] = True
+            continue
+        rect = np.array([[x0[i], y0[i]], [x1[i], y0[i]],
+                         [x1[i], y1[i]], [x0[i], y1[i]],
+                         [x0[i], y0[i]]], dtype=np.float64)
+        for ring in rings:
+            if edges_intersect(rect, ring):
+                keep[i] = True
+                break
+    return keep
+
+
+def _axis(c, part, frac, span, origin):
+    """A coordinate of grid column/row ``c``, spelled like
+    ``cells.cell_bounds``: its low edge, high edge, centre (all probe
+    lines), or a free point inside."""
+    lo = c * span - origin
+    hi = lo + span
+    return (lo, hi, (lo + hi) / 2, lo + frac * span)[part]
+
+
+@st.composite
+def _lattice_rings(draw, n, span):
+    """1-4 rings on a ``span``-cell window of an n x n grid, in grid
+    units: a vertex is (x, y, dy), x and y each a (column, part, frac)
+    triple for ``_axis`` and dy an offset in cell heights (slivers):
+    free rings whose vertices snap to cell corners, edges and centres
+    and may repeat the previous y (horizontal edges on probe rows);
+    lattice boxes (nested boxes are holes, disjoint ones multi-shell);
+    thin slivers crossing whole cells with no probe or vertex inside;
+    and single-point rings."""
+    c0 = draw(st.integers(0, n - 1 - span)), draw(st.integers(0, n - 1 - span))
+    part = st.integers(0, 3)
+    frac = st.floats(0.0, 1.0, exclude_max=True)
+
+    def coord(axis):
+        return (c0[axis] + draw(st.integers(0, span)), draw(part),
+                draw(frac))
+
+    rings = []
+    for _ in range(draw(st.integers(1, 4))):
+        kind = draw(st.sampled_from(["free", "box", "sliver", "point"]))
+        if kind == "free":
+            ring = [(coord(0), coord(1), 0.0)]
+            for _ in range(draw(st.integers(1, 11))):
+                y = ring[-1][1] if draw(st.booleans()) else coord(1)
+                ring.append((coord(0), y, 0.0))
+            if draw(st.booleans()):
+                ring.append(ring[0])
+        elif kind == "box":
+            xa, xb, ya, yb = coord(0), coord(0), coord(1), coord(1)
+            ring = [(xa, ya, 0.0), (xa, yb, 0.0), (xb, yb, 0.0),
+                    (xb, ya, 0.0), (xa, ya, 0.0)]
+        elif kind == "sliver":
+            xa = (c0[0], 3, draw(frac))
+            xb = (c0[0] + span, 3, draw(frac))
+            ya = (c0[1] + draw(st.integers(0, span)), 3,
+                  draw(st.floats(0.05, 0.45)))
+            yb = ya if draw(st.booleans()) else coord(1)
+            t = draw(st.floats(1e-9, 1e-2))
+            ring = [(xa, ya, 0.0), (xb, yb, 0.0), (xb, yb, t),
+                    (xa, ya, t), (xa, ya, 0.0)]
+        else:
+            ring = [(coord(0), coord(1), 0.0)]
+        if draw(st.booleans()):
+            ring = ring[::-1]
+        rings.append(ring)
+    return rings
+
+
+def _to_lnglat(rings, res):
+    w, h = 360.0 / 2.0 ** res, 180.0 / 2.0 ** res
+    out = []
+    for ring in rings:
+        pts = [(_axis(*x, w, 180.0), _axis(*y, h, 90.0) + dy * h)
+               for x, y, dy in ring]
+        out.append(np.array(pts, dtype=np.float64))
+    return out
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.integers(4, 20).flatmap(
+    lambda res: st.tuples(st.just(res), _lattice_rings(1 << res, 6))))
+def test_polygon_cover_scanline_matches_per_rect_reference(case):
+    res, raw = case
+    rings = _to_lnglat(raw, res)
+    closed = [close_ring(r) for r in rings]
+    # the kernel on every cell of the bbox grown by one cell, outside
+    # cells included, for raw and closed rings alike
+    allpts = np.vstack(rings)
+    pad = 360.0 / 2.0 ** res
+    cells = C.cover_bbox(allpts[:, 0].min() - pad, allpts[:, 1].min() - pad,
+                         allpts[:, 0].max() + pad, allpts[:, 1].max() + pad,
+                         res)
+    bounds = C.cell_bounds(cells)
+    for rs in (rings, closed):
+        got = rects_intersect_polygon(rs, *bounds)
+        assert np.array_equal(got, _reference_rects_intersect_polygon(
+            rs, *bounds))
+    # and the public cover
+    got = C.polygon_cover(closed, res)
+    with mock.patch.object(C, "rects_intersect_polygon",
+                           _reference_rects_intersect_polygon):
+        want = C.polygon_cover(closed, res)
+    assert np.array_equal(got, want)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.sampled_from([3, 8, 13, 18]).flatmap(
+    lambda z: st.tuples(st.just(z), _lattice_rings(1 << z, 5))))
+def test_tile_cover_scanline_matches_per_rect_reference(case):
+    """Lattice rings laid out in tile space, mapped back to lon/lat
+    through the inverse of ``tiles._to_tile_space``."""
+    z, raw = case
+    n = 2.0 ** z
+    rings = []
+    for ring in raw:
+        pts = []
+        for x, y, dy in ring:
+            tx = _axis(*x, 1.0, 0.0)
+            ty = _axis(*y, 1.0, 0.0) + dy
+            lat = math.degrees(math.atan(math.sinh(math.pi
+                                                   * (1 - 2 * ty / n))))
+            pts.append((tx / n * 360.0 - 180.0, lat))
+        rings.append(np.array(pts, dtype=np.float64))
+    got = T.tile_cover(rings, z)
+    with mock.patch.object(T, "rects_intersect_polygon",
+                           _reference_rects_intersect_polygon):
+        want = T.tile_cover(rings, z)
+    assert np.array_equal(got, want)
