@@ -275,15 +275,13 @@ def q_pip_rect(spark, sf_dir):
 
 
 def q_pip_rect_dist(spark, sf_dir):
-    """J2 via the DISTRIBUTED polygon-dimension path: cover cells
-    computed executor-side in mapInPandas (polygon_cover_df) and rings
-    riding the cover table — the millions-of-parcels posture. Must
-    equal the driver-dim pip_rect oracle exactly."""
-    from esri_dump_spark.operators.spatial_join import (
-        point_in_polygon_join_dist)
+    """J2 with the polygons as a DataFrame: the same join then computes
+    the cover cells executor-side in mapInPandas (polygon_cover_df) with
+    rings riding the cover table — the millions-of-parcels posture.
+    Must equal the pandas-input pip_rect oracle exactly."""
     pts = _pip_points(spark, sf_dir)
     polys = spark.createDataFrame(_poly_pdf("rect", RECT_RING))
-    out = point_in_polygon_join_dist(pts, polys, res=8)
+    out = point_in_polygon_join(pts, polys, res=8)
     return out.select("c_custkey").orderBy("c_custkey")
 
 

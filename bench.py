@@ -71,7 +71,7 @@ def _spark(cores: int):
                      shuffle_partitions=max(cores * 2, 16))
 
 
-def _spatial_tile_job(spark, points_path: str, polys, dim) -> int:
+def _spatial_tile_job(spark, points_path: str, polys) -> int:
     """The north-star job: point/image table -> PIP spatial join (cell
     broadcast + exact ray-cast refine) -> xyz tile assignment ->
     per-(polygon, tile) rollup. Returns output group count."""
@@ -80,7 +80,7 @@ def _spatial_tile_job(spark, points_path: str, polys, dim) -> int:
     from esri_dump_spark.operators.tiles import assign_tiles
 
     pts = spark.read.parquet(points_path)
-    joined = point_in_polygon_join(pts, polys, res=RES, dim=dim)
+    joined = point_in_polygon_join(pts, polys, res=RES)
     tiled = assign_tiles(joined, z=Z)
     out = (tiled.groupBy("poly_id", "tile_id")
            .agg(F.count(F.lit(1)).alias("n")))
@@ -207,8 +207,7 @@ def _noise_check(times: dict[str, float], sf) -> dict:
 
 
 def _scale_input():
-    """Points table + polygon dim for the scaling job (cached)."""
-    from esri_dump_spark.operators.spatial_join import build_polygon_dim
+    """Points table + polygon table for the scaling job (cached)."""
     from esri_dump_spark.sources.fixtures import (
         bench_polygons_pdf, ensure_points_parquet,
         points_parquet_committed, points_parquet_path)
@@ -223,12 +222,10 @@ def _scale_input():
             path = ensure_points_parquet(gen, N_POINTS)
         finally:
             gen.stop()
-    polys = bench_polygons_pdf()
-    dim = build_polygon_dim(polys, RES)
-    return path, polys, dim
+    return path, bench_polygons_pdf()
 
 
-def run_scaling(points_path: str, polys, dim) -> dict:
+def run_scaling(points_path: str, polys) -> dict:
     """Interleaved passes: each pass times the job at BOTH parallelism
     levels back-to-back, so hypervisor-level noise (invisible steal on
     this shared host — throughput swings ~1.5x while the guest shows
@@ -240,10 +237,10 @@ def run_scaling(points_path: str, polys, dim) -> dict:
         for cores in SCALE_PAIR:
             spark = _spark(cores)
             try:
-                _spatial_tile_job(spark, points_path, polys, dim)  # warm
+                _spatial_tile_job(spark, points_path, polys)  # warm
                 for _ in range(2):
                     t0 = time.time()
-                    _spatial_tile_job(spark, points_path, polys, dim)
+                    _spatial_tile_job(spark, points_path, polys)
                     meas[cores].append(time.time() - t0)
             finally:
                 spark.stop()
@@ -304,7 +301,7 @@ keeps every temporary L2-resident and restores ~4x.
 
 def main() -> None:
     sf = SF_DIR.rstrip("/").split("sf")[-1]
-    points_path, polys, dim = _scale_input()
+    points_path, polys = _scale_input()
 
     spark = _spark(CPUS)
     t_start = time.time()
@@ -336,11 +333,11 @@ def main() -> None:
         noise["persistent"] = kept["episode"]
 
     # north-star throughput at full parallelism (median of reps)
-    _spatial_tile_job(spark, points_path, polys, dim)  # warm
+    _spatial_tile_job(spark, points_path, polys)  # warm
     meas = []
     for _ in range(SCALE_REPS):
         t0 = time.time()
-        _spatial_tile_job(spark, points_path, polys, dim)
+        _spatial_tile_job(spark, points_path, polys)
         meas.append(time.time() - t0)
     spark.stop()
     best32 = min(meas)
@@ -351,7 +348,7 @@ def main() -> None:
     do_scaling = ("--scaling" in sys.argv
                   or os.environ.get("SPARK_GRAFT_SCALING", "1") != "0")
     if do_scaling:
-        scaling = run_scaling(points_path, polys, dim)
+        scaling = run_scaling(points_path, polys)
         write_bench_md(scaling, abs32)
 
     out = {

@@ -1,27 +1,38 @@
-"""Point-in-polygon spatial join (J2) — broadcast cell join + exact
+"""Point-in-polygon spatial join (J2) — cell equi-join + exact
 ray-cast refine.
 
 Physical plan (SURVEY.md §2.5, §4):
 
-  polygons (small)  --driver--> cover cells per polygon (kernels.cells)
-                                -> tiny (cell, poly_id) DataFrame
-  points (huge)     --JVM-----> cell id attached via a pure SQL
-                                expression (whole-stage codegen;
-                                no Python in the hot path)
-  coarse:           points JOIN broadcast(cells) ON cell  (equi-join,
-                    no shuffle of the big side)
+  polygons          --> exact cover cells per polygon (kernels.cells)
+                        -> (cell, poly_id [, poly_name]) cover table
+  points (huge)     --JVM--> cell id attached via a pure SQL
+                        expression (whole-stage codegen;
+                        no Python in the hot path)
+  coarse:           points JOIN cover ON cell  (equi-join)
   refine:           Arrow-batched pandas UDF running the exact
                     reference ray-cast (even-odd, half-open edge rule)
                     against the candidate polygon's rings
 
-At 10^12 rows the coarse phase is the only data movement and it is
-broadcast-shaped; the refine is embarrassingly parallel. Skewed hot
-cells don't hurt a broadcast join (no shuffle by key), but per-cell
-*aggregations* downstream do — those use operators.skew.
+``point_in_polygon_join`` is the one join; the polygon input decides
+where the cover is built and where the refine finds geometry:
 
-The refine predicate is exactly `coordinatesContainPoint`
-(/root/reference/lib/rings2geojson.ts:54-64) extended to multi-ring
-even-odd, vectorized over the Arrow batch.
+- a pandas frame is a few polygons held by the driver: the cover is
+  built there and broadcast, and the refine looks the parsed rings up
+  by ``poly_id`` in a dict shipped once with the UDF — only
+  (lon, lat, poly_id) cross the Arrow boundary per candidate;
+- a DataFrame may be millions of parcels: the cover is built on the
+  executors (``polygon_cover_df``) and ``rings_json`` rides every cover
+  row, so nothing polygon-sized reaches the driver. The planner / AQE
+  picks broadcast or shuffle from the cover's size.
+
+At 10^12 rows the coarse phase is the only data movement; the refine is
+embarrassingly parallel. Skewed hot cells don't hurt a broadcast join
+(no shuffle by key), but per-cell *aggregations* downstream do — those
+use operators.skew.
+
+The refine predicate is exactly the reference's `coordinatesContainPoint`
+(lib/rings2geojson.ts) extended to multi-ring even-odd, vectorized over
+the Arrow batch.
 """
 
 from __future__ import annotations
@@ -33,15 +44,15 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..kernels import cells as C
 from ..kernels.rings import points_in_polygon, close_ring
 
-__all__ = ["attach_cell", "polygon_cell_index", "build_polygon_dim",
-           "point_in_polygon_join", "polygon_cover_df",
-           "point_in_polygon_join_dist", "polygon_intersects_join",
-           "DEFAULT_RES"]
+__all__ = ["attach_cell", "polygon_cell_index", "point_in_polygon_join",
+           "polygon_cover_df", "point_in_polygon_join_dist",
+           "polygon_intersects_join", "DEFAULT_RES"]
 
 DEFAULT_RES = 12
 
@@ -58,33 +69,32 @@ def _parse_rings(rings_json: str) -> list[np.ndarray]:
             for r in json.loads(rings_json)]
 
 
+def _cover_schema(extra: list[T.StructField]) -> T.StructType:
+    """Explicit cover schema: (cell, poly_id, *extra). Stated, never
+    inferred, so an empty polygon table still yields a typed table."""
+    return T.StructType([T.StructField("cell", T.LongType()),
+                         T.StructField("poly_id", T.LongType()), *extra])
+
+
+def _cover_frame(polygons: pd.DataFrame, res: int,
+                 cols: tuple[str, ...] = ()) -> pd.DataFrame:
+    """One (cell, poly_id, *cols) row per cell of each polygon's exact
+    cover (``kernels.cells.polygon_cover``)."""
+    covers = [C.polygon_cover(_parse_rings(rj), res, exact=True)
+              for rj in polygons["rings_json"]]
+    rows = np.repeat(np.arange(len(covers)),
+                     np.array([len(c) for c in covers], dtype=np.int64))
+    out = polygons[["poly_id", *cols]].iloc[rows].reset_index(drop=True)
+    out.insert(0, "cell", np.concatenate([np.empty(0, np.int64), *covers]))
+    return out
+
+
 def polygon_cell_index(spark: SparkSession, polygons: pd.DataFrame,
                        res: int = DEFAULT_RES) -> DataFrame:
-    """(cell, poly_id) cover table. ``polygons`` is the small dimension
-    side as pandas: columns (poly_id, rings_json). Computed driver-side
-    — right for polygon counts in the thousands; for larger polygon
-    sets use ``polygon_cover_df`` / ``point_in_polygon_join_dist``,
-    which run the same kernel executor-side in mapInPandas."""
-    cover_pdf, _ = build_polygon_dim(polygons, res)
-    return spark.createDataFrame(cover_pdf)
-
-
-def build_polygon_dim(polygons: pd.DataFrame, res: int = DEFAULT_RES):
-    """Precompute the static polygon dimension: (cell-cover pdf,
-    rings-by-poly-id dict). At scale this is built once per polygon
-    set and reused across every query/run against it."""
-    cells, pids, rings_by_pid = [], [], {}
-    for rec in polygons.itertuples(index=False):
-        rings = _parse_rings(rec.rings_json)
-        cover = C.polygon_cover(rings, res, exact=True)
-        cells.append(cover)
-        pids.append(np.full(cover.shape, rec.poly_id, dtype=np.int64))
-        rings_by_pid[int(rec.poly_id)] = [a.tolist() for a in rings]
-    cover_pdf = pd.DataFrame({
-        "cell": np.concatenate(cells) if cells else np.array([], np.int64),
-        "poly_id": np.concatenate(pids) if pids else np.array([], np.int64),
-    })
-    return cover_pdf, rings_by_pid
+    """(cell, poly_id) cover table of a pandas polygon table
+    (poly_id, rings_json), computed on the driver."""
+    return spark.createDataFrame(_cover_frame(polygons, res),
+                                 _cover_schema([]))
 
 
 def polygon_cover_df(polygons: DataFrame, res: int = DEFAULT_RES,
@@ -93,9 +103,7 @@ def polygon_cover_df(polygons: DataFrame, res: int = DEFAULT_RES,
     """Distributed polygon dimension: the exact cell-cover kernel
     (``kernels.cells.polygon_cover``, unchanged) run EXECUTOR-side in
     ``mapInPandas`` over a polygon DataFrame — the scale path for
-    polygon sets beyond driver memory (millions of parcels), where
-    ``build_polygon_dim``'s driver loop stops being a 'small static
-    dim' and becomes the bottleneck.
+    polygon sets beyond driver memory (millions of parcels).
 
     Input: (poly_id long, rings_json string [, keep_cols...]).
     Output: one row per (cell, polygon): (cell, poly_id [, rings_json]
@@ -106,107 +114,35 @@ def polygon_cover_df(polygons: DataFrame, res: int = DEFAULT_RES,
     join) pass ``with_rings=False`` so the geometry string is never
     replicated per cover cell across the Arrow boundary. Never
     materializes on the driver."""
-    import pyspark.sql.types as T
-    fields = [T.StructField("cell", T.LongType()),
-              T.StructField("poly_id", T.LongType())]
-    if with_rings:
-        fields.append(T.StructField("rings_json", T.StringType()))
-    in_schema = dict(zip(polygons.schema.names, polygons.schema.fields))
-    for c in keep_cols:
-        fields.append(T.StructField(c, in_schema[c].dataType))
-    schema = T.StructType(fields)
+    cols = (("rings_json",) if with_rings else ()) + tuple(keep_cols)
+    schema = _cover_schema([polygons.schema[c] for c in cols])
 
     def run(batches):
         for b in batches:
-            out = []
-            for rec in b.itertuples(index=False):
-                rings = _parse_rings(rec.rings_json)
-                cover = C.polygon_cover(rings, res, exact=True)
-                row = {"cell": cover,
-                       "poly_id": np.full(cover.shape, rec.poly_id,
-                                          dtype=np.int64)}
-                if with_rings:
-                    row["rings_json"] = rec.rings_json
-                for c in keep_cols:
-                    row[c] = getattr(rec, c)
-                out.append(pd.DataFrame(row))
-            yield (pd.concat(out, ignore_index=True) if out
-                   else pd.DataFrame(columns=[f.name for f in fields]))
+            yield _cover_frame(b, res, cols)
 
-    cols = ["poly_id", "rings_json", *keep_cols]
-    return polygons.select(*cols).mapInPandas(run, schema=schema)
+    return polygons.select("poly_id", "rings_json", *keep_cols) \
+        .mapInPandas(run, schema=schema)
 
 
-def _pip_refine_json():
-    """Refine predicate for the distributed path: rings arrive as the
-    joined ``rings_json`` column (no driver-held dict). Batches group
-    by distinct polygon so the ray-cast kernel runs vectorized per
-    polygon; JSON parse cost is per (batch x distinct polygon)."""
+def _pip_refine(rings_of):
+    """Exact point-in-polygon refine over Arrow batches of (lon, lat,
+    key): ``rings_of(key)`` gives the key's parsed rings. The batch is
+    factorized on the key, so each distinct polygon is looked up once
+    and ray-cast vectorized over its points."""
 
     @pandas_udf("boolean")
-    def refine(lon: pd.Series, lat: pd.Series,
-               rings_json: pd.Series) -> pd.Series:
+    def refine(lon: pd.Series, lat: pd.Series, key: pd.Series) -> pd.Series:
         out = np.zeros(len(lon), dtype=bool)
         pts = np.column_stack([lon.to_numpy(np.float64),
                                lat.to_numpy(np.float64)])
-        codes, uniques = pd.factorize(rings_json)
-        for u, rj in enumerate(uniques):
+        codes, uniques = pd.factorize(key)
+        for u, k in enumerate(uniques):
             mask = codes == u
-            rings = _parse_rings(rj)
-            out[mask] = points_in_polygon(pts[mask], rings)
+            out[mask] = points_in_polygon(pts[mask], rings_of(k))
         return pd.Series(out)
 
     return refine
-
-
-def point_in_polygon_join_dist(points: DataFrame, polygons: DataFrame,
-                               lon_col: str = "lon", lat_col: str = "lat",
-                               res: int = DEFAULT_RES,
-                               how: str = "inner",
-                               id_col: str | None = None,
-                               broadcast_cover: bool | None = None
-                               ) -> DataFrame:
-    """J2 at polygon-table scale: same semantics as
-    ``point_in_polygon_join`` but the polygon side is a DataFrame and
-    the cover dimension is built executor-side (``polygon_cover_df``)
-    — nothing polygon-sized ever touches the driver.
-
-    Join strategy: ``broadcast_cover=True`` forces the broadcast
-    coarse join (right for cover tables under the broadcast
-    threshold); ``False`` forces the shuffle path (points shuffle on
-    cell — at 10^12 rows pair this with cell-bucketed storage so the
-    exchange is a no-op); ``None`` (default) lets AQE decide from the
-    cover's runtime size."""
-    keep = ("name",) if "name" in polygons.columns else ()
-    cover = polygon_cover_df(polygons, res, keep_cols=keep)
-    if "name" in cover.columns:
-        # rename BEFORE the join: a points table with its own `name`
-        # column would otherwise be ambiguous (left_semi's
-        # select(*points.columns) raises) or double-renamed in inner
-        # mode — same poly_name contract as point_in_polygon_join
-        cover = cover.withColumnRenamed("name", "poly_name")
-    if broadcast_cover is True:
-        cover = F.broadcast(cover)
-    elif broadcast_cover is False:
-        cover = cover.hint("shuffle_hash")
-
-    pts = attach_cell(points, lon_col, lat_col, res)
-    refine = _pip_refine_json()
-    cand = pts.join(cover, "cell", "inner")
-    matched = cand.filter(refine(F.col(lon_col), F.col(lat_col),
-                                 F.col("rings_json")))
-
-    if how == "inner":
-        return matched.drop("cell", "rings_json")
-    key = id_col if id_col is not None else points.columns[0]
-    if key not in points.columns:
-        raise ValueError(f"id_col {key!r} not in points columns")
-    if how == "left_semi":
-        return matched.select(*points.columns).dropDuplicates([key])
-    if how == "left_anti":
-        matched_ids = matched.select(key).distinct()
-        return points.join(matched_ids, key, "left_anti")
-    raise ValueError(f"unknown how={how!r}")
 
 
 def _poly_intersect_refine():
@@ -286,53 +222,52 @@ def polygon_intersects_join(left: DataFrame, right: DataFrame,
     raise ValueError(f"unknown how={how!r}")
 
 
-def point_in_polygon_join(points: DataFrame, polygons: pd.DataFrame,
+def point_in_polygon_join(points: DataFrame,
+                          polygons: pd.DataFrame | DataFrame,
                           lon_col: str = "lon", lat_col: str = "lat",
-                          res: int = DEFAULT_RES,
-                          how: str = "inner", dim=None,
+                          res: int = DEFAULT_RES, how: str = "inner",
                           id_col: str | None = None) -> DataFrame:
-    """Spatial join of a big point table against a small polygon table.
+    """Spatial join of a big point table against a polygon table of
+    (poly_id long, rings_json string [, name string]).
 
-    how='inner'      -> point rows x matching poly_id (+name)
+    how='inner'      -> point rows + matching poly_id (+ poly_name)
     how='left_semi'  -> point rows inside >= 1 polygon (deduped)
     how='left_anti'  -> point rows inside none
+
+    ``polygons`` as pandas: the cover is built on the driver and
+    broadcast, and the refine reads rings from a closed-over dict keyed
+    by poly_id — geometry never rides the candidate rows. As a
+    DataFrame: the cover is built on the executors with ``rings_json``
+    on every cover row (nothing polygon-sized touches the driver), and
+    the planner / AQE chooses the join from the cover's size.
 
     ``id_col`` — the point-identity column the semi/anti variants key
     on; defaults to the first column of ``points`` (the historical
     convention), but callers whose id is not leftmost must pass it —
     keying on position silently breaks under column reorder.
-
-    ``dim`` — optional precomputed ``build_polygon_dim`` result so the
-    static dimension isn't rebuilt per query.
     """
-    spark = points.sparkSession
-    cover_pdf, rings_by_pid = dim if dim is not None \
-        else build_polygon_dim(polygons, res)
-    cell_index = spark.createDataFrame(cover_pdf)
-
-    @pandas_udf("boolean")
-    def pip_refine(lon: pd.Series, lat: pd.Series,
-                   poly_id: pd.Series) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        pts = np.column_stack([lon.to_numpy(np.float64),
-                               lat.to_numpy(np.float64)])
-        for pid in poly_id.unique():
-            mask = (poly_id == pid).to_numpy()
-            rings = [np.asarray(r, np.float64) for r in rings_by_pid[int(pid)]]
-            out[mask] = points_in_polygon(pts[mask], rings)
-        return pd.Series(out)
+    keep = ("name",) if "name" in polygons.columns else ()
+    if isinstance(polygons, pd.DataFrame):
+        rings = {int(pid): _parse_rings(rj) for pid, rj in
+                 zip(polygons["poly_id"], polygons["rings_json"])}
+        cover = F.broadcast(points.sparkSession.createDataFrame(
+            _cover_frame(polygons, res, keep),
+            _cover_schema([T.StructField(c, T.StringType()) for c in keep])))
+        refine, geom = _pip_refine(lambda pid: rings[pid]), "poly_id"
+    else:
+        cover = polygon_cover_df(polygons, res, keep_cols=keep)
+        refine, geom = _pip_refine(_parse_rings), "rings_json"
+    # rename BEFORE the join: a points table with its own `name` column
+    # would otherwise be ambiguous (left_semi's select(*points.columns)
+    # raises) or double-renamed in inner mode
+    cover = cover.withColumnRenamed("name", "poly_name")
 
     pts = attach_cell(points, lon_col, lat_col, res)
-    cand = pts.join(F.broadcast(cell_index), "cell", "inner")
-    matched = cand.filter(pip_refine(F.col(lon_col), F.col(lat_col),
-                                     F.col("poly_id")))
+    matched = pts.join(cover, "cell").filter(
+        refine(F.col(lon_col), F.col(lat_col), F.col(geom)))
 
     if how == "inner":
-        if "name" in polygons.columns:
-            names = spark.createDataFrame(polygons[["poly_id", "name"]]) \
-                .withColumnRenamed("name", "poly_name")
-            matched = matched.join(F.broadcast(names), "poly_id", "left")
-        return matched.drop("cell")
+        return matched.drop("cell", "rings_json")
     key = id_col if id_col is not None else points.columns[0]
     if key not in points.columns:
         raise ValueError(f"id_col {key!r} not in points columns")
@@ -342,3 +277,7 @@ def point_in_polygon_join(points: DataFrame, polygons: pd.DataFrame,
         matched_ids = matched.select(key).distinct()
         return points.join(matched_ids, key, "left_anti")
     raise ValueError(f"unknown how={how!r}")
+
+
+# second name, still imported by spatialbench's parcel prefix jobs
+point_in_polygon_join_dist = point_in_polygon_join

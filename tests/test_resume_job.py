@@ -64,7 +64,7 @@ def test_job_resumes_from_file_lineage(spark, tmp_path):
 
 def test_job_dist_polygon_dim_matches_driver_dim(spark, tmp_path):
     """The spark-submit job with a parquet polygon table (executor-
-    built cover via point_in_polygon_join_dist) must produce the same
+    built cover in point_in_polygon_join) must produce the same
     summed rollup as the driver-dim path, and resume identically."""
     from esri_dump_spark.sources.fixtures import polygons_pdf
 

@@ -69,6 +69,14 @@ def test_pip_join_semi_anti_partition(spark, points_pdf):
     assert n_in + n_out == len(points_pdf)
     exp_ids = {iid for iid, _ in _brute_force_pip(points_pdf, polys)}
     assert n_in == len(exp_ids)
+    # no polygons at all, as pandas and as a DataFrame: nothing inside,
+    # every point outside
+    empty = polys.iloc[:0]
+    for src in (empty, spark.createDataFrame(
+            empty, "poly_id long, name string, rings_json string")):
+        assert [point_in_polygon_join(pts, src, res=10, how=how).count()
+                for how in ("inner", "left_semi", "left_anti")] == \
+            [0, 0, len(points_pdf)], type(src)
 
 
 def test_pip_join_uses_broadcast(spark, points_pdf):
@@ -97,26 +105,25 @@ def _grid_polygons_pdf(n: int) -> pd.DataFrame:
 
 
 def test_pip_join_dist_matches_driver_path(spark, points_pdf):
-    """The distributed polygon-dimension build (cover computed
-    executor-side via mapInPandas over >= 10k polygons) must produce
-    exactly the driver-path result."""
-    from esri_dump_spark.operators.spatial_join import (
-        point_in_polygon_join_dist)
-    polys = _grid_polygons_pdf(10_000)
+    """The same polygons as a DataFrame (cover computed executor-side
+    via mapInPandas, rings riding the cover rows) and as pandas (cover
+    built on the driver, rings looked up by poly_id) give identical
+    rows for every ``how`` — on >= 10k grid squares and on the fixture
+    polygons (holes, multipolygon, promoted hole, degenerate ring,
+    sliver)."""
     pts = spark.createDataFrame(points_pdf)
-    pdf_polys = spark.createDataFrame(polys).repartition(8)
-    got = {(r.image_id, r.poly_id)
-           for r in point_in_polygon_join_dist(pts, pdf_polys,
-                                               res=8).collect()}
-    exp = {(r.image_id, r.poly_id)
-           for r in point_in_polygon_join(pts, polys, res=8).collect()}
-    assert got == exp and len(got) > 100
-    # semi/anti partition holds on the dist path too
-    n_in = point_in_polygon_join_dist(pts, pdf_polys, res=8,
-                                      how="left_semi").count()
-    n_out = point_in_polygon_join_dist(pts, pdf_polys, res=8,
-                                       how="left_anti").count()
-    assert n_in + n_out == len(points_pdf)
+    for polys, res in ((_grid_polygons_pdf(10_000), 8),
+                       (polygons_pdf(), 10)):
+        pdf_polys = spark.createDataFrame(polys).repartition(8)
+        for how in ("inner", "left_semi", "left_anti"):
+            got, exp = (point_in_polygon_join(pts, src, res=res, how=how)
+                        for src in (pdf_polys, polys))
+            if how == "inner":
+                cols = [*points_pdf.columns, "poly_id", "poly_name"]
+                assert got.columns == exp.columns == cols
+            rows = sorted(got.collect())
+            assert rows == sorted(exp.collect()), (res, how)
+            assert len(rows) > 100, (res, how)
 
 
 def test_polygon_intersects_join_matches_kernel_brute_force(spark):
@@ -205,25 +212,16 @@ def test_polygon_intersects_join_plan_is_equi_join(spark):
 
 
 def test_pip_join_dist_cover_built_executor_side(spark, points_pdf):
-    """Plan shape: the cover dimension comes from a MapInPandas
-    (executor-side kernel) feeding the coarse join — NOT a driver
-    materialization (no LocalTableScan/Scan ExistingRDD on the cover
-    side), and the forced-shuffle path shows no broadcast of it."""
-    from esri_dump_spark.operators.spatial_join import (
-        point_in_polygon_join_dist)
+    """Plan shape: with a DataFrame polygon table the cover dimension
+    comes from a MapInPandas (executor-side kernel) feeding the coarse
+    join — NOT a driver materialization (no LocalTableScan/Scan
+    ExistingRDD on the cover side)."""
     pts = spark.createDataFrame(points_pdf)
     pdf_polys = spark.createDataFrame(_grid_polygons_pdf(10_000))
-    plan = point_in_polygon_join_dist(
-        pts, pdf_polys, res=8, broadcast_cover=False)._jdf \
+    plan = point_in_polygon_join(pts, pdf_polys, res=8)._jdf \
         .queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan, plan[:3000]
-    assert "BroadcastHashJoin" not in plan, plan[:3000]
     assert "Scan ExistingRDD" not in plan, plan[:3000]
-    # broadcast variant: still executor-built, exchanged via broadcast
-    plan_b = point_in_polygon_join_dist(
-        pts, pdf_polys, res=8, broadcast_cover=True)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan_b and "BroadcastHashJoin" in plan_b
 
 
 def test_knn_matches_exact_oracle(spark):
@@ -557,23 +555,21 @@ def test_salted_ops_randomized_equivalence(spark):
 def test_pip_join_dist_points_with_name_column(spark, points_pdf):
     """A points table that itself has a `name` column must not become
     ambiguous with the polygon dimension's kept name (renamed to
-    poly_name BEFORE the join)."""
-    from esri_dump_spark.operators.spatial_join import (
-        point_in_polygon_join_dist)
+    poly_name BEFORE the join), for pandas and DataFrame polygons."""
     polys = polygons_pdf()
     pts_named = spark.createDataFrame(
         points_pdf.assign(name=points_pdf["image_id"]))
-    pdf_polys = spark.createDataFrame(polys)
-    inner = point_in_polygon_join_dist(pts_named, pdf_polys, res=9)
-    assert inner.columns.count("poly_name") == 1
-    assert inner.columns.count("name") == 1  # the points' own column
-    semi = point_in_polygon_join_dist(pts_named, pdf_polys, res=9,
-                                      how="left_semi", id_col="image_id")
-    assert set(semi.columns) == set(pts_named.columns)
     exp = {(r.image_id, r.poly_id) for r in point_in_polygon_join(
         spark.createDataFrame(points_pdf), polys, res=9).collect()}
-    got = {(r.image_id, r.poly_id) for r in inner.collect()}
-    assert got == exp
+    for src in (polys, spark.createDataFrame(polys)):
+        inner = point_in_polygon_join(pts_named, src, res=9)
+        assert inner.columns.count("poly_name") == 1
+        assert inner.columns.count("name") == 1  # the points' own column
+        semi = point_in_polygon_join(pts_named, src, res=9,
+                                     how="left_semi", id_col="image_id")
+        assert set(semi.columns) == set(pts_named.columns)
+        got = {(r.image_id, r.poly_id) for r in inner.collect()}
+        assert got == exp
 
 
 def test_two_phase_agg_allows_distinct_prefixed_column(spark):
